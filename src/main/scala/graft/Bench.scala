@@ -53,57 +53,6 @@ object Bench {
     }
   }
 
-  /** Run one scaling-pair leg in an ISOLATED child JVM sized to `cpus` via
-    * -XX:ActiveProcessorCount (see ScalingLeg's scaladoc for why: a shared
-    * 32-core JVM gives the 1-core leg 32-thread GC/JIT for free and biases
-    * the pair). Inherits this JVM's --add-opens/-D/-Xmx flags; stderr
-    * passes through, stdout carries `LEG <sec>`. None on any failure →
-    * caller falls back to the in-JVM session. */
-  private def runLegIsolated(cpus: Int, rows: Long): Option[Double] =
-    try {
-      import scala.jdk.CollectionConverters._
-      val javaBin = java.nio.file.Paths.get(
-        sys.props("java.home"), "bin", "java").toString
-      val in = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toList
-      val keep = scala.collection.mutable.Buffer[String]()
-      var i = 0
-      while (i < in.length) {
-        val a = in(i)
-        if (a == "--add-opens" || a == "--add-exports") {
-          keep += a
-          if (i + 1 < in.length) { keep += in(i + 1); i += 1 }
-        } else if (a.startsWith("--add-opens=") || a.startsWith("--add-exports=") ||
-            a.startsWith("-D") || a.startsWith("-Xmx")) keep += a
-        i += 1
-      }
-      val cmd = Seq(javaBin) ++ keep ++ Seq(
-        s"-XX:ActiveProcessorCount=$cpus",
-        "-cp", sys.props("java.class.path"),
-        "graft.tools.ScalingLeg", rows.toString, cpus.toString)
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      // redirect stdout to a temp file so the 600 s timeout is live:
-      // readAllBytes() on the pipe would block until the child closes
-      // stdout, making waitFor(timeout) dead code under a hung child
-      val outFile = java.io.File.createTempFile("graft_leg_", ".out")
-      outFile.deleteOnExit()
-      pb.redirectOutput(outFile)
-      val proc = pb.start()
-      val ok = proc.waitFor(600, java.util.concurrent.TimeUnit.SECONDS)
-      if (!ok) { proc.destroyForcibly(); None }
-      else {
-        val out = new String(
-          java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
-        out.linesIterator.collectFirst {
-          case l if l.startsWith("LEG ") => l.drop(4).trim.toDouble
-        }
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] isolated leg failed (${e.getMessage}); in-JVM fallback")
-      None
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -175,17 +124,7 @@ object Bench {
           (if (r <= pairReps) Seq(nCores -> scalingRows, (4 * nCores) -> scalingRows)
            else Seq.empty)
       levels.foreach { case (lv, rows) =>
-        // SPARK_GRAFT_ISOLATED_LEGS=1 runs pair legs in child JVMs sized to
-        // their core count (ActiveProcessorCount — see runLegIsolated): the
-        // faithful executor-container analog, but each rep pays a fresh
-        // JIT, which measured NOISIER than the shared-JVM default on this
-        // jittery VM — so isolation is opt-in, in-JVM is the default
-        val isolate = sys.env.get("SPARK_GRAFT_ISOLATED_LEGS").contains("1")
-        val t =
-          if (lv != cpus && isolate)
-            runLegIsolated(lv, rows)
-              .getOrElse(withSession(lv)(s => runSuite(s, rows)._1))
-          else withSession(lv)(s => runSuite(s, rows)._1)
+        val t = withSession(lv)(s => runSuite(s, rows)._1)
         System.err.println(f"[bench] suite rep $r local[$lv] × $rows rows: $t%.2f s")
         times((lv, rows)) = times((lv, rows)) :+ t
       }
@@ -193,25 +132,36 @@ object Bench {
 
     val suiteSec = times((cpus, benchRows)).min
     results(s"suite_validate_${benchRows}rows") = suiteSec
-    val seqPerSec = benchRows / suiteSec
-    val secN = times((nCores, scalingRows)).min
-    val sec4N = times((4 * nCores, scalingRows)).min
-    val eff = (scalingRows / sec4N) / (4 * (scalingRows / secN))
-
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    val total = results.values.sum
-    def arr(v: Vector[Double]) = v.map(t => f"$t%.2f").mkString("[", ",", "]")
-    val allN = arr(times((nCores, scalingRows)))
-    val all4N = arr(times((4 * nCores, scalingRows)))
-    val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","validated_seq_per_sec":$seqPerSec%.0f,"bench_rows":$benchRows,"cpus":$cpus,"reps":$reps,"batt_reps":$battReps,"scaling":{"rows":$scalingRows,"n_cores":$nCores,"sec_n":$secN%.3f,"sec_4n":$sec4N%.3f,"tput_n":${scalingRows / secN}%.0f,"tput_4n":${scalingRows / sec4N}%.0f,"efficiency":$eff%.3f,"pair_reps":$pairReps,"all_n":$allN,"all_4n":$all4N}}"""
-    // dedicated channels (VERDICT r3 #3): the JSON line goes to stdout RAW
-    // (build.sbt's StdoutOutput strategy strips sbt's [info] prefix) AND to
-    // a file, so the driver can parse either even if a logger interleaves
-    println(json)
+    def json(withQueries: Boolean) = resultJson(results.toSeq, withQueries,
+      sfDir, benchRows, cpus, reps, battReps, suiteSec, scalingRows, nCores,
+      pairReps, times((nCores, scalingRows)), times((4 * nCores, scalingRows)))
+    // dedicated channels (VERDICT r3 #3): the compact line goes to stdout
+    // RAW (build.sbt's StdoutOutput strategy strips sbt's [info] prefix)
+    // and the full object to a file
+    println(json(withQueries = false))
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_result.json"),
-      (json + "\n").getBytes("UTF-8"))
+      (json(withQueries = true) + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
+  }
+
+  /** The bench result object: headline, per-query seconds and the scaling
+    * pair with its per-rep walls. `withQueries = false` drops only the
+    * per-query map — that is the last stdout line, which must stay inside
+    * the 2,000-char tail a log reader keeps (with the map it measured
+    * 2,066 chars in r5 and grows with every query). */
+  def resultJson(queries: Seq[(String, Double)], withQueries: Boolean,
+      sfDir: String, benchRows: Long, cpus: Int, reps: Int, battReps: Int,
+      suiteSec: Double, scalingRows: Long, nCores: Int, pairReps: Int,
+      allN: Seq[Double], all4N: Seq[Double]): String = {
+    val total = queries.map(_._2).sum
+    val qs =
+      if (!withQueries) ""
+      else queries.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+        .mkString("\"queries\":{", ",", "},")
+    val (secN, sec4N) = (allN.min, all4N.min)
+    val eff = (scalingRows / sec4N) / (4 * (scalingRows / secN))
+    def arr(v: Seq[Double]) = v.map(t => f"$t%.2f").mkString("[", ",", "]")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec",$qs"sf":"$sfDir","validated_seq_per_sec":${benchRows / suiteSec}%.0f,"bench_rows":$benchRows,"cpus":$cpus,"reps":$reps,"batt_reps":$battReps,"scaling":{"rows":$scalingRows,"n_cores":$nCores,"sec_n":$secN%.3f,"sec_4n":$sec4N%.3f,"tput_n":${scalingRows / secN}%.0f,"tput_4n":${scalingRows / sec4N}%.0f,"efficiency":$eff%.3f,"pair_reps":$pairReps,"all_n":${arr(allN)},"all_4n":${arr(all4N)}}}"""
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,15 +16,8 @@ object Verify {
       sys.exit(2)
     }
     def wanted(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.ScalingBench.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => wanted(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -61,7 +61,7 @@ object CrossRow {
     * and paid a second full-data exchange on (key, salt) for groups that
     * were already partition-local: measured at 10⁷ rows that shape costs
     * 8.4 s / 663 CPU-s vs 5.1 s / 342 CPU-s for this one, same output
-    * (tools/UniqProbe A/B). */
+    * (interleaved in-JVM A/B recorded in NOTES_r3.md and BASELINE.md). */
   def duplicateKeys(df: DataFrame, key: String): DataFrame = {
     val (hashed, dupHashes) = dupHashDetection(df, key, Seq.empty)
     // exact re-count over only the candidate keys (dup set ≪ table; AQE

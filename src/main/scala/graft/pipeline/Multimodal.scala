@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * `javax.sound.sampled`); VIDEO container metadata is REAL (a from-scratch
   * ISO-BMFF/MP4 box-tree walk — `mp4Meta` — reading mvhd/tkhd/stsz fields
   * per ISO 14496-12, header-only). What remains STUBBED, clearly marked:
-  * pixel/PCM-level work that needs a codec library this sandbox lacks —
-  * `featureExtract` (model forward pass) and the GRF0 legacy container
-  * used by the mixed synthetic pipeline.
+  * the GRF0 legacy container used by the mixed synthetic pipeline.
   */
 object Multimodal {
 
@@ -26,9 +24,6 @@ object Multimodal {
 
   final case class MediaMeta(doc_id: Long, media_type: String, width: Int,
                              height: Int, n_frames: Int, n_bytes: Long)
-
-  final case class MediaFeature(doc_id: Long, media_type: String,
-                                embedding: Array[Float])
 
   final case class Frame(doc_id: Long, frame_idx: Int, frame: Array[Byte])
 
@@ -470,23 +465,6 @@ object Multimodal {
       val bos = new java.io.ByteArrayOutputStream()
       javax.imageio.ImageIO.write(img, if (id % 2 == 0) "png" else "jpg", bos)
       MediaRow(id, "image", bos.toByteArray)
-    }
-  }
-
-  /** ==== STUB ==== feature extraction (CLIP/whisper-style): deterministic
-    * 16-dim embedding from payload bytes, batched per partition like a model
-    * forward pass would be. */
-  def featureExtract(ds: Dataset[MediaRow], dim: Int = 16): Dataset[MediaFeature] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { rows =>
-      rows.map { r =>
-        val emb = new Array[Float](dim)
-        r.media.zipWithIndex.foreach { case (b, i) =>
-          emb(i % dim) += (b & 0xff) / 255.0f
-        }
-        val norm = math.sqrt(emb.map(x => x * x).sum).toFloat max 1e-6f
-        MediaFeature(r.doc_id, r.media_type, emb.map(_ / norm))
-      }
     }
   }
 

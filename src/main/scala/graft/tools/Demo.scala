@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives the flagship entry end-to-end on sf0.001 and prints plans —
   * `sbt "runMain graft.tools.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ScalingBench.session(4)
+    // the demo prints whole plans: lift the shared builder's plan-string cap
+    spark.conf.unset("spark.sql.maxPlanStringLength")
 
     val verdicts = graft.SparkEntry.entry(spark)
     println("=== verdicts (sf0.001 documents) ===")

@@ -1,15 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive._
 import org.apache.spark.sql.execution.exchange._
 
-/** Counts input scans / exchanges / exchange-reuses in the suite verdicts
-  * FINAL adaptive plan — the structural evidence behind the Suite
-  * scaladoc's scan budget. Traverses the executed plan tree (strings get
-  * truncated); does NOT descend into ReusedExchange (that subtree is the
-  * shared one being counted once at its definition site). */
+/** Walks an executed (final adaptive) plan tree node by node — structural
+  * plan checks (PlanSpec's scan budget, `x_skew_uniqueness`'s skew-join
+  * probe) traverse the tree because plan strings get truncated. Does NOT
+  * descend into ReusedExchange (that subtree is the shared one, counted
+  * once at its definition site). */
 object SuitePlanProbe {
   def walk(p: SparkPlan): Seq[SparkPlan] = {
     val kids: Seq[SparkPlan] = p match {
@@ -21,26 +20,5 @@ object SuitePlanProbe {
     // subqueries (scalar/in-subquery/dynamic-pruning) wrap plans of their
     // own — a scan hiding inside one must count against the scan budget
     p +: (kids ++ p.subqueries).flatMap(walk)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val rows = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = ScalingBench.session(32)
-    val df = spark.read.parquet(graft.Bench.ensureParquet(spark, rows))
-    val dim = graft.data.SequenceGen.dimSources(spark)
-    val v = graft.run.Suite.validateSequences(df, dim)
-    val agg = v.verdicts.agg(sum(col("violations")))
-    agg.collect() // finalize the adaptive plan
-    val nodes = walk(agg.queryExecution.executedPlan)
-    def n(f: SparkPlan => Boolean) = nodes.count(f)
-    println(s"[plan] FileSourceScan: ${n(_.isInstanceOf[FileSourceScanExec])}")
-    println(s"[plan] ShuffleExchange: ${n(_.isInstanceOf[ShuffleExchangeExec])}")
-    println(s"[plan] BroadcastExchange: ${n(_.isInstanceOf[BroadcastExchangeExec])}")
-    println(s"[plan] ReusedExchange: ${n(_.isInstanceOf[ReusedExchangeExec])}")
-    println(s"[plan] RDDScan (checkpoint): ${n(_.isInstanceOf[RDDScanExec])}")
-    println(s"[plan] HashAggregate: ${n(_.isInstanceOf[org.apache.spark.sql.execution.aggregate.HashAggregateExec])}")
-    nodes.collect { case s: FileSourceScanExec => s }.foreach(s =>
-      println(s"[scan] ${s.schema.fieldNames.mkString(",")}"))
-    spark.stop()
   }
 }

@@ -21,7 +21,9 @@ import Harness._
 class FormatBoundarySpec extends AnyFunSuite {
 
   private val hostLabel64 = "a" * 64 + ".com"
-  private val hostTotal256 = Seq.fill(5)("a" * 63).mkString(".") // 319 chars > 255
+  // every label is legal (<= 63 chars), so only the 255-char total decides
+  private val host255 = Seq.fill(4)("a" * 63).mkString(".")
+  private val host256 = Seq("a" * 63, "a" * 63, "a" * 63, "a" * 62, "a").mkString(".")
 
   private val accept: Map[String, Seq[String]] = Map(
     "date" -> Seq("2023-04-05", "2023-00-15", "2023-04-31", "2023-12-31"),
@@ -31,7 +33,7 @@ class FormatBoundarySpec extends AnyFunSuite {
     "duration" -> Seq("P3Y6M4DT12H30M5S", "P4W", "PT1S", "P1D"),
     "email" -> Seq("a@b.co", "A.B@EXAMPLE.COM", "a+tag@sub.example.com"),
     "hostname" -> Seq("example.com", "example.com.", "localhost",
-      "xn--d1acufc.xn--p1ai"),
+      "xn--d1acufc.xn--p1ai", host255),
     "ipv4" -> Seq("0.0.0.0", "255.255.255.255", "192.168.0.1"),
     "ipv6" -> Seq("::", "::1", "2001:db8::1", "2001:DB8::1", "0:0:0:0:0:0:0:1"),
     "uuid" -> Seq("123e4567-e89b-12d3-a456-426614174000",
@@ -48,7 +50,7 @@ class FormatBoundarySpec extends AnyFunSuite {
       "2023-04-05T10:20:30+60:00"),
     "duration" -> Seq("P", "PT", "P1S", "P1W2D", "P1DT"),
     "email" -> Seq("not-an-email", "a@-b.com", "a@b..com", "@b.co", "a@"),
-    "hostname" -> Seq("-bad.com", "bad-.com", "a..b", "", hostLabel64, hostTotal256),
+    "hostname" -> Seq("-bad.com", "bad-.com", "a..b", "", hostLabel64, host256),
     "ipv4" -> Seq("256.1.1.1", "01.1.1.1", "1.1.1", "1.1.1.1.1"),
     "ipv6" -> Seq("2001:::1", "1:2:3:4:5:6:7:8:9", "x::1"),
     "uuid" -> Seq("123e4567e89b12d3a456426614174000",
@@ -70,7 +72,6 @@ class FormatBoundarySpec extends AnyFunSuite {
   test("column path agrees with the driver-side matcher on every boundary vector") {
     // the compiled rlike check and propertyNames' driver-side matcher read
     // the same table; this pins that they decide every vector identically
-    // (newline-free vectors — the one semantic gap is pinned below)
     import spark.implicits._
     for (f <- Formats.regexes.keys) {
       val vs = accept(f) ++ reject(f)
@@ -87,15 +88,16 @@ class FormatBoundarySpec extends AnyFunSuite {
     }
   }
 
-  test("known corner: anchored rlike (find) accepts a trailing newline the driver full-match rejects") {
-    // The column check is `v.rlike("^...$")` — java find() semantics, where
-    // `$` also matches before a final line terminator — while propertyNames'
-    // driver-side check is java matches() (whole string). The regexes are
-    // all ^...$-anchored so the two agree on every newline-free string; a
-    // value with a trailing '\n' is the one documented divergence.
+  test("column path rejects a trailing line terminator, like the driver matcher") {
+    // `rlike` has find semantics, where `$` would also match before a final
+    // line terminator; the \A…\z anchors make the column check reject
+    // exactly what the driver-side full match rejects
     val u = "123e4567-e89b-12d3-a456-426614174000"
-    assert(!Formats.matches("uuid", u + "\n"))
-    assert(errorsForValue("""{"type":"string","format":"uuid"}""",
-      s"'$u' || char(10)").isEmpty)
+    for ((v, sql) <- Seq(u + "\n" -> s"'$u' || char(10)",
+                         u + "\r\n" -> s"'$u' || char(13) || char(10)")) {
+      assert(!Formats.matches("uuid", v))
+      assert(errorsForValue("""{"type":"string","format":"uuid"}""", sql).nonEmpty,
+        s"column path accepted ${v.length}-char uuid with trailing line terminator")
+    }
   }
 }

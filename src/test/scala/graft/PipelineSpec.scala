@@ -786,7 +786,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(t4 > s4, f"training must beat blind random centroids at equal probe budget: $t4%.3f vs $s4%.3f")
   }
 
-  test("multimodal: stub decode plumbing — meta, features, frames, spec validation") {
+  test("multimodal: stub decode plumbing — meta, frames, spec validation") {
     val media = Multimodal.syntheticMedia(spark, 120)
     val meta = Multimodal.decodeMeta(media)
     assert(meta.count() == 120)
@@ -795,13 +795,6 @@ class PipelineSpec extends AnyFunSuite {
       SpecParser.parse(Multimodal.MediaSpecJson), metaDf.schema)
     val v = Validator.run(metaDf.withColumn("part", lit("all")), checks, "doc_id", Some("part"))
     assert(v.violations.count() == 0) // synthetic media satisfies its spec
-
-    val feats = Multimodal.featureExtract(media)
-    val norms = feats.toDF().select(
-      sqrt(aggregate(transform(col("embedding"), x => x * x),
-        lit(0.0d), (a, b) => a + b)).as("n"))
-      .collect().map(_.getDouble(0))
-    assert(norms.forall(n => math.abs(n - 1.0) < 1e-3))
 
     val frames = Multimodal.frameSample(media, everyN = 4).toDF()
     assert(frames.count() > 0)
