@@ -132,7 +132,7 @@ object CrossRow {
                  part: String = "part", rank: Int = BaseRank,
                  totals: Option[DataFrame] = None,
                  checkpointDups: Boolean = false): Validation = {
-    val id = s"dataset/unique:$key"
+    val id = uniquenessId(key)
     val message = s"""Expected "$key" values to be unique across the dataset"""
 
     val violations =
@@ -160,7 +160,7 @@ object CrossRow {
       }
 
     Validation(verdictsFromViolations(totals.getOrElse(partTotals(df, part)),
-      violations, rank, id), violations)
+      violations, Seq(rank -> id)), violations)
   }
 
   /** Validation frames for "`column` ∈ dim(`dimCol`)" (FK). Nulls are not FK
@@ -169,8 +169,8 @@ object CrossRow {
                   docId: String = "doc_id", part: String = "part",
                   rank: Int = BaseRank + 1,
                   totals: Option[DataFrame] = None): Validation = {
-    val id = s"dataset/referential:$column"
-    val message = s"""Expected "$column" to reference a value in the dimension table"""
+    val id = referentialId(column)
+    val message = referentialMessage(column)
     val fact = df.select(col(part).as("part"), col(docId).cast(StringType).as("doc_id"),
                          col(column))
       .where(col(column).isNotNull)
@@ -183,7 +183,7 @@ object CrossRow {
         lit(message).as("message"))
 
     Validation(verdictsFromViolations(totals.getOrElse(partTotals(df, part)),
-      violations, rank, id), violations)
+      violations, Seq(rank -> id)), violations)
   }
 
   /** FK check for dimension tables TOO LARGE to broadcast (`referential`'s
@@ -205,8 +205,8 @@ object CrossRow {
                           docId: String = "doc_id", part: String = "part",
                           rank: Int = BaseRank + 1,
                           totals: Option[DataFrame] = None): Validation = {
-    val id = s"dataset/referential:$column"
-    val message = s"""Expected "$column" to reference a value in the dimension table"""
+    val id = referentialId(column)
+    val message = referentialMessage(column)
     val fact = df.select(col(part).as("part"), col(docId).cast(StringType).as("doc_id"),
                          col(column))
       .where(col(column).isNotNull)
@@ -220,7 +220,7 @@ object CrossRow {
         lit(message).as("message"))
 
     Validation(verdictsFromViolations(totals.getOrElse(partTotals(df, part)),
-      violations, rank, id), violations)
+      violations, Seq(rank -> id)), violations)
   }
 
   /** Row-level cross-field consistency as a pluggable CompiledCheck, e.g.
@@ -236,42 +236,55 @@ object CrossRow {
       pass = coalesce(ok, lit(false)),
       observed = observed.cast(StringType))
 
-  /** Referential-integrity VERDICT counts derived from a histogram cube
-    * that carries the FK column as dimension column `bucket` (Suite's drift
-    * cube): violations per part = Σ c over cells whose bucket value is
-    * absent from the dim. The verdicts action then touches NO row-level
-    * scan at all — the cube is already materialized for drift — while the
-    * row-level `referential(...).violations` frame stays the authoritative
-    * row fetch, executed only when violations are actually written.
-    *
-    * Count-equivalence to `referential` requires the cube's bucketing of
-    * the FK column to be the identity (string-typed FK; the cube casts
-    * dims to string) — gated row-for-row against the row-level verdicts in
-    * CrossRowSpec. Null FK values are not violations (cube cell with null
-    * bucket is excluded), matching `referential`. */
-  def referentialVerdictsFromCube(cube: DataFrame, bucket: String,
-                                  dim: DataFrame, dimCol: String,
-                                  totals: DataFrame, column: String,
-                                  rank: Int = BaseRank + 1): DataFrame = {
-    val vioCounts = cube.where(col(bucket).isNotNull)
-      .join(broadcast(dim.select(col(dimCol).cast(StringType).as(bucket)).distinct),
-        Seq(bucket), "left_anti")
-      .groupBy(col("part")).agg(sum(col("c")).as("violations"))
-    verdictsFromCounts(totals, vioCounts, rank, s"dataset/referential:$column")
+  /** `referential` as a row-level CompiledCheck for the single row pass:
+    * `flagged` is `df` left-joined to the broadcast DISTINCT dim keys (so the
+    * join is 1:1), which adds a hit flag, and the check passes where
+    * `column` is null (not an FK violation, as in `referential`) or hit.
+    * Same id, rank, path, observed and message as `referential`, so its
+    * violation rows are identical — and it costs no scan of its own. */
+  def referentialCheck(df: DataFrame, column: String, dim: DataFrame, dimCol: String,
+                       rank: Int = BaseRank + 1): (DataFrame, CompiledCheck) = {
+    val hit = s"_fk_hit_$column"
+    val keys = dim.select(col(dimCol).as("_fk_key")).distinct.withColumn(hit, lit(true))
+    val flagged = df.join(broadcast(keys), col(column) === col("_fk_key"), "left")
+      .drop("_fk_key")
+    (flagged, CompiledCheck(
+      id = referentialId(column), path = s".$column", keyword = "referential",
+      message = referentialMessage(column), rank = rank,
+      pass = col(column).isNull || col(hit).isNotNull,
+      observed = col(column).cast(StringType)))
   }
 
-  /** Verdict frame derived from a violation frame + per-part totals.
-    * Both sides aggregate before the join, so the join is |parts|-sized. */
-  private[graft] def verdictsFromViolations(totals: DataFrame, violations: DataFrame,
-                                            rank: Int, id: String): DataFrame =
-    verdictsFromCounts(totals,
-      violations.groupBy(col("part")).agg(count(lit(1)).as("violations")), rank, id)
+  def uniquenessId(key: String): String = s"dataset/unique:$key"
 
-  private def verdictsFromCounts(totals: DataFrame, vioCounts: DataFrame,
-                                 rank: Int, id: String): DataFrame =
-    totals.join(vioCounts, Seq("part"), "left")
-      .select(
-        col("part"), lit(rank).as("rank"), lit(id).as("constraint_id"), col("total"),
-        coalesce(col("violations"), lit(0L)).as("violations"),
-        (coalesce(col("violations"), lit(0L)) === 0).as("pass"))
+  def referentialId(column: String): String = s"dataset/referential:$column"
+
+  private def referentialMessage(column: String): String =
+    s"""Expected "$column" to reference a value in the dimension table"""
+
+  /** THE verdict derivation — a verdict is a function of its violation
+    * rows, as the reference's `:success` iff `errors` is empty: every
+    * (part, constraint) of `totals` (part, total) × the static `catalog`
+    * (rank, constraint_id), left-joined to `count(*)` of `violations` per
+    * (part, rank, constraint_id). Zero-violation parts still get their
+    * passing verdict. Both sides are |parts × constraints|-sized. The join
+    * is null-safe on `part`: a USING join would drop a null partition's
+    * violations and report it clean. */
+  private[graft] def verdictsFromViolations(totals: DataFrame, violations: DataFrame,
+                                            catalog: Seq[(Int, String)]): DataFrame = {
+    val counts = violations
+      .groupBy(col("part").as("_vp"), col("rank").as("_vr"), col("constraint_id").as("_vc"))
+      .agg(count(lit(1)).as("_n"))
+    val constraints = explode(array(catalog.map { case (rank, id) =>
+      struct(lit(rank).as("rank"), lit(id).as("constraint_id"))
+    }: _*))
+    val n = coalesce(col("_n"), lit(0L))
+    totals.select(col("part"), col("total"), constraints.as("_k"))
+      .select(col("part"), col("_k.rank").as("rank"),
+        col("_k.constraint_id").as("constraint_id"), col("total"))
+      .join(counts, col("part") <=> col("_vp") && col("rank") === col("_vr") &&
+        col("constraint_id") === col("_vc"), "left")
+      .select(col("part"), col("rank"), col("constraint_id"), col("total"),
+        n.as("violations"), (n === 0).as("pass"))
+  }
 }

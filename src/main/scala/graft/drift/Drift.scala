@@ -101,6 +101,13 @@ object Drift {
         threshold, baseRank + i)
     }
 
+  /** The (rank, constraint_id) of each drift check `multiValidationFromCube`
+    * builds over `dims`. */
+  def catalog(dims: Seq[(String, Column, Double)], baseRank: Int = 1100): Seq[(Int, String)] =
+    dims.zipWithIndex.map { case ((name, _, _), i) => (baseRank + i) -> id(name) }
+
+  private def id(name: String): String = s"dataset/drift:$name"
+
   /** Verdict-shaped drift check: pass iff KL ≤ threshold. The partition's
     * divergence value rides in `observed` of a per-partition violation row. */
   def validation(df: DataFrame, bucket: Column, name: String,
@@ -111,18 +118,17 @@ object Drift {
 
   private def validationFromDivergence(div: DataFrame, name: String,
                                        klThreshold: Double, rank: Int): Validation = {
-    val id = s"dataset/drift:$name"
     val message = s"""Expected "$name" distribution to stay within KL $klThreshold of the global mix"""
 
     val verdicts = div.select(
-      col("part"), lit(rank).as("rank"), lit(id).as("constraint_id"),
+      col("part"), lit(rank).as("rank"), lit(id(name)).as("constraint_id"),
       col("total"),
       when(col("kl") <= klThreshold, 0L).otherwise(1L).as("violations"),
       (col("kl") <= klThreshold).as("pass"))
 
     val violations = div.where(col("kl") > klThreshold).select(
       col("part"), col("part").as("doc_id"), lit(rank).as("rank"),
-      lit(id).as("constraint_id"), lit(".").as("path"),
+      lit(id(name)).as("constraint_id"), lit(".").as("path"),
       format_string("kl=%.6f psi=%.6f", col("kl"), col("psi")).as("observed"),
       lit(message).as("message"))
 

@@ -18,6 +18,9 @@ class CrossRowSpec extends AnyFunSuite {
   lazy val seqs = SequenceGen.sequences(spark, 3000L, numParts = 4).cache()
   lazy val dim = SequenceGen.dimSources(spark)
 
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("generator is deterministic and partitioning-invariant") {
     val a = SequenceGen.sequences(spark, 500L, 4).orderBy("doc_id", "n_tok")
       .collect().map(_.toString)
@@ -80,31 +83,62 @@ class CrossRowSpec extends AnyFunSuite {
     // dims too big to broadcast) — outputs must be indistinguishable
     val a = CrossRow.referential(seqs, "source", dim, "source")
     val b = CrossRow.referentialLargeDim(seqs, "source", dim, "source")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
     assert(rows(a.violations) == rows(b.violations))
     assert(rows(a.verdicts) == rows(b.verdicts))
     assert(b.violations.count() == seqs.where(col("source") === "spam").count())
   }
 
-  test("referential verdicts from the drift cube equal row-level verdicts") {
-    // Suite derives referential verdict COUNTS from the histogram cube
-    // (source = dim _b1) so the verdicts action needs no row-level scan —
-    // the counts must be indistinguishable from the row-level derivation,
-    // including null-FK exclusion and zero-violation parts
-    val totals = CrossRow.partTotals(seqs)
-    val row = CrossRow.referential(seqs, "source", dim, "source",
-      totals = Some(totals)).verdicts
-    val cube = Drift.cube(seqs, Seq(
-      ("n_tok", Drift.widthBucket(col("n_tok"), 8.0), 0.05),
-      ("source", col("source"), 0.05)))
-    val cubed = CrossRow.referentialVerdictsFromCube(cube, "_b1", dim, "source",
-      totals, "source")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(rows(row) == rows(cubed))
-    assert(cubed.agg(sum(col("violations"))).collect()(0).getLong(0) ==
-      seqs.where(col("source") === "spam").count())
+  test("violations in a null part reach their verdict (uniqueness and FK)") {
+    import spark.implicits._
+    // embedded uniqueness: the null-part rows are rows like any other, so
+    // their duplicate key is 2 violations of the NULL part's verdict
+    val t = Seq[(String, String, String)](("p0", "a", "web"), ("p0", "a", "web"),
+      (null, "b", "spam"), (null, "b", "web"), ("p0", "c", "spam"))
+      .toDF("part", "doc_id", "source")
+    def nullPart(v: graft.run.Validation) = {
+      val vs = v.verdicts.where(col("part").isNull).collect()
+      assert(vs.length == 1, vs.toSeq)
+      (vs(0).getAs[Long]("violations"), vs(0).getAs[Boolean]("pass"))
+    }
+    val uniq = CrossRow.uniqueness(t, "doc_id", "part")
+    assert(uniq.violations.where(col("part").isNull).count() == 2)
+    assert(nullPart(uniq) == ((2L, false)))
+    val fk = CrossRow.referential(t, "source", dim, "source")
+    assert(fk.violations.where(col("part").isNull).count() == 1)
+    assert(nullPart(fk) == ((1L, false)))
+  }
+
+  test("suite verdicts, derived from its violations, equal every per-check verdict") {
+    // SequenceGen data plus two partitions where every row is an FK/enum
+    // violation and half the rows share one doc_id (a table-scale dup set)
+    val spam = SequenceGen.sequences(spark, 400L, numParts = 2)
+      .withColumn("part", concat(lit("spam_"), col("part")))
+      .withColumn("source", lit("spam"))
+      .withColumn("doc_id", when(substring(col("doc_id"), 5, 12).cast("long") % 2 === 0,
+        lit("doc-999999999999")).otherwise(col("doc_id")))
+    val t = seqs.unionByName(spam).cache()
+    val cfg = Suite.Config()
+    val spec = SpecParser.parse(SequenceGen.SeqSpecJson)
+    val consistency = CrossRow.consistency("n_tok=size(tokens)",
+      col("n_tok") === size(col("tokens")), col("n_tok"))
+    val dims = Suite.driftDims(cfg)
+    val perCheck = Seq(
+      Validator.verdictFrame(t, graft.compile.Compiler.compile(spec, t.schema) :+ consistency,
+        col("part")),
+      CrossRow.uniqueness(t, "doc_id", "part").verdicts,
+      CrossRow.referential(t, "source", dim, "source").verdicts) ++
+      Drift.multiValidationFromCube(Drift.cube(t, dims), dims).map(_.verdicts)
+    val suite = Suite.validateSequences(t, dim, spec, cfg)
+    val derived = suite.verdicts
+    assert(rows(derived) == rows(perCheck.reduce(_ unionByName _)))
+    // the row pass's FK hit flag flags exactly the anti join's rows
+    assert(rows(suite.violations.where(col("constraint_id") === "dataset/referential:source")) ==
+      rows(CrossRow.referential(t, "source", dim, "source").violations))
+    val failing = derived.where(col("part") === "spam_p000" && !col("pass"))
+      .select("constraint_id").collect().map(_.getString(0)).toSet
+    assert(Set(".source/enum", "dataset/referential:source", "dataset/unique:doc_id")
+      .subsetOf(failing), failing)
+    t.unpersist()
   }
 
   test("consistency check flags n_tok != size(tokens) rows in the row pass") {

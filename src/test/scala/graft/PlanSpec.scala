@@ -325,9 +325,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("suite verdicts action reads the table ONCE (other branches ride checkpoints)") {
-    // row checks are the only consumer that needs the full-width row scan;
-    // uniqueness candidates and the drift cube materialize once in their
-    // own checkpoint lineages, and referential verdict counts + per-part
+    // the row pass (incl. the FK hit flag) is the only consumer that needs
+    // the full-width row scan; uniqueness candidates and the drift cube
+    // materialize once in their own checkpoint lineages, and the per-part
     // totals re-aggregate the cube — a second FileSourceScan in the final
     // adaptive plan means a fusion regressed
     val dir = "/tmp/graft_test/suite_scan_gate"
