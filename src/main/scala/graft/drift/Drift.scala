@@ -40,9 +40,12 @@ object Drift {
     val baseTotal = base.agg(sum(col("bc")).as("bt"), count(lit(1)).as("k"))
 
     // grid = every (part × bucket) pair, so buckets absent from a partition
-    // still contribute (smoothed) mass — all frames here are histogram-sized
+    // still contribute (smoothed) mass — all frames here are histogram-sized.
+    // Null-safe on both keys: a null part or bucket is a group like any
+    // other, and its count must land in `p` as it does in `t` and `q`
+    val hc = h.select(col("part").as("_hp"), col("bucket").as("_hb"), col("c"))
     val grid = totals.crossJoin(base).crossJoin(baseTotal)
-      .join(h, Seq("part", "bucket"), "left")
+      .join(hc, col("part") <=> col("_hp") && col("bucket") <=> col("_hb"), "left")
       .withColumn("c", coalesce(col("c"), lit(0L)))
     val eps = lit(smoothing)
     val p = (col("c") + eps) / (col("t") + eps * col("k"))
@@ -62,8 +65,8 @@ object Drift {
     * frame.
     *
     * Consumers should share it through `.localCheckpoint(false)` (as
-    * `Suite`/`multiValidation` do): ReuseExchange does NOT collapse the
-    * consumers' differently-pruned copies — measured on the suite verdicts
+    * `Suite` does): ReuseExchange does NOT collapse the consumers'
+    * differently-pruned copies — measured on the suite verdicts
     * final plan, the un-checkpointed cube's scan executed 3× (once per
     * drift dimension + once column-pruned to `part` for the totals, which
     * the optimizer rewrites into a direct scan) — whereas the checkpointed
@@ -81,17 +84,9 @@ object Drift {
   def totalsFromCube(cube: DataFrame): DataFrame =
     cube.groupBy(col("part")).agg(sum(col("c")).as("total"))
 
-  /** SINGLE-SCAN multi-dimension drift: n drift checks for the scan+shuffle
-    * price of one — the cube is lazily checkpointed so the dimensions
-    * actually share one materialization (see `cube`). */
-  def multiValidation(df: DataFrame, dims: Seq[(String, Column, Double)],
-                      part: String = "part", smoothing: Double = 0.5,
-                      baseRank: Int = 1100): Seq[Validation] =
-    multiValidationFromCube(cube(df, dims, part).localCheckpoint(false),
-      dims, smoothing, baseRank)
-
-  /** Drift checks over a prebuilt `cube` frame (shared with other
-    * consumers, e.g. `Suite`'s verdict totals). */
+  /** n drift checks over a prebuilt `cube` frame for the scan+shuffle price
+    * of one, when the cube is lazily checkpointed and shared with its other
+    * consumers (e.g. `Suite`'s verdict totals; see `cube`). */
   def multiValidationFromCube(cube: DataFrame, dims: Seq[(String, Column, Double)],
                               smoothing: Double = 0.5,
                               baseRank: Int = 1100): Seq[Validation] =

@@ -6,12 +6,21 @@ import org.apache.spark.sql.functions._
 /** Per-partition statistics sketches + checkpoint/resume (SURVEY.md §7.1
   * step 5, north-star "validation state").
   *
-  * Stats are one `groupBy(part)` with mergeable sketches — HyperLogLog++
-  * (`approx_count_distinct`), Greenwald-Khanna quantiles
-  * (`percentile_approx`), and the t-digest (`TDigestAgg.tdigestSketch` —
-  * checkpointed as centroid state so per-partition digests MERGE into
-  * table-level quantiles without re-reading data); partial aggregation makes
-  * the shuffle O(parts), not O(rows).
+  * Stats are one `groupBy(part)`: exact `total`/min/max/avg/null counts
+  * plus ONE sketch family, Spark's built-in DataSketches aggregates — a KLL
+  * quantile sketch of the numeric column and HyperLogLog sketches of the
+  * key and the categorical column. Each is stored as its binary sketch
+  * state, not as an estimate, so per-partition rows in the metrics store
+  * MERGE: table-level and cross-run quantiles are `kll_merge_agg_bigint` +
+  * `kll_sketch_get_quantile_bigint` over `MetricsStore.read`, distinct
+  * counts `hll_union_agg` + `hll_sketch_estimate` — no data re-read.
+  * Partial aggregation makes the shuffle O(parts), not O(rows). KLL `k`
+  * (200) and HLL `lgConfigK` (12) are the built-in defaults.
+  *
+  * The job extracts no quantile: a partition whose numeric column is all
+  * null has an empty KLL sketch, and `kll_sketch_get_quantile_bigint`
+  * throws on it (failing the run), while `kll_sketch_get_n_bigint` (0) and
+  * the merges accept it. Readers extract estimates from merged states.
   *
   * Checkpointing: metrics rows are keyed by (part, spec_hash, run_epoch) and
   * appended via Spark's file-commit protocol (write-to-temp then atomic
@@ -22,7 +31,15 @@ import org.apache.spark.sql.functions._
   */
 object Metrics {
 
-  /** Sketch columns for the sequences shape; generalizes by argument. */
+  /** Normalized rank error of a KLL sketch at the built-in `k`: a quantile
+    * read from it has a true rank within ±this of the one asked for, with
+    * 99% confidence (DataSketches' single-quantile bound). */
+  val KllRankError: Double =
+    org.apache.datasketches.kll.KllSketch.getNormalizedRankError(
+      org.apache.datasketches.kll.KllSketch.DEFAULT_K, false)
+
+  /** Sketch columns for the sequences shape; generalizes by argument. The
+    * numeric column must be integral (its KLL sketch is the bigint one). */
   def partitionStats(df: DataFrame, part: String = "part", key: String = "doc_id",
                      numeric: String = "n_tok", cat: String = "source"): DataFrame =
     df.groupBy(col(part).as("part")).agg(
@@ -30,24 +47,11 @@ object Metrics {
       min(col(numeric)).as(s"${numeric}_min"),
       max(col(numeric)).as(s"${numeric}_max"),
       avg(col(numeric)).as(s"${numeric}_avg"),
-      percentile_approx(col(numeric), array(lit(0.5), lit(0.95), lit(0.99)), lit(10000))
-        .as(s"${numeric}_quantiles"),
-      TDigestAgg.tdigestSketch()(col(numeric).cast("double"))
-        .as(s"${numeric}_tdigest"),
-      approx_count_distinct(col(key)).as(s"${key}_approx_distinct"),
+      kll_sketch_agg_bigint(col(numeric)).as(s"${numeric}_kll"),
+      hll_sketch_agg(col(key)).as(s"${key}_hll"),
       sum(col(key).isNull.cast("long")).as(s"${key}_nulls"),
       sum(col(cat).isNull.cast("long")).as(s"${cat}_nulls"),
-      approx_count_distinct(col(cat)).as(s"${cat}_approx_distinct"))
-
-  /** Merge checkpointed per-partition digest states (|parts| rows — driver
-    * scale) into one table-level digest: quantiles over the whole table from
-    * the metrics store alone, no data re-read. */
-  def mergedDigest(stats: DataFrame, stateCol: String): TDigest =
-    stats.select(col(s"$stateCol.means"), col(s"$stateCol.weights"))
-      .collect()
-      .foldLeft(new TDigest()) { (acc, row) =>
-        acc.merge(TDigest.fromState(row.getSeq[Double](0), row.getSeq[Double](1)))
-      }
+      hll_sketch_agg(col(cat)).as(s"${cat}_hll"))
 }
 
 /** Storage boundary for checkpointed validation state, keyed by

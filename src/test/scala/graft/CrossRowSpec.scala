@@ -166,6 +166,23 @@ class CrossRowSpec extends AnyFunSuite {
     assert(v.violations.count() == 1)
   }
 
+  test("drift: a null part or a null bucket keeps its counts in the KL") {
+    import spark.implicits._
+    // rows (part, bucket): a null bucket is a bucket and a null part a part,
+    // in the totals, the global mix AND the per-part histogram alike
+    val t = Seq[(String, String)](("a", "x"), ("a", null), ("a", null), ("b", "x"),
+      ("b", "x"), ("b", "y"), (null, "y"), (null, "y")).toDF("part", "bucket")
+    val kl = Drift.divergence(t, col("bucket")).collect()
+      .map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
+    Seq(Some("a") -> 0.248570, Some("b") -> 0.099026, None -> 0.250285).foreach {
+      case (part, expected) =>
+        assert(math.abs(kl(part) - expected) < 1e-6, s"part=$part kl=${kl(part)}")
+    }
+    val v = Drift.validation(t, col("bucket"), "bucket", klThreshold = 0.05)
+    val failing = v.verdicts.where(!col("pass")).select("part").collect().map(_.getString(0))
+    assert(failing.contains("a"), failing.toSeq)
+  }
+
   test("full suite unions row + cross-row + drift verdicts") {
     val v = Suite.validateSequences(seqs, dim)
     val ids = v.verdicts.select("constraint_id").distinct().collect().map(_.getString(0)).toSet

@@ -198,6 +198,34 @@ class PlanSpec extends AnyFunSuite {
       "shingle lambda re-inlined into a Filter:\n" + p)
   }
 
+  test("partition stats: one scan, partial aggregate below the one exchange, built-in sketches only") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stats-plan").toString
+    graft.data.SequenceGen.sequences(spark, 2000L, 4).write.mode("overwrite").parquet(dir)
+    val stats = graft.stats.Metrics.partitionStats(spark.read.parquet(dir))
+    stats.collect() // finalize AQE
+    val nodes = graft.tools.SuitePlanProbe.walk(stats.queryExecution.executedPlan)
+    val scans = nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
+    assert(scans == 1, s"expected 1 parquet scan, got $scans")
+    val exchanges = nodes.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(exchanges.length == 1, s"expected 1 exchange, got ${exchanges.length}")
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    val below = graft.tools.SuitePlanProbe.walk(exchanges.head.child)
+    assert(below.exists {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
+        a.aggregateExpressions.nonEmpty && a.aggregateExpressions.forall(_.mode == Partial)
+      case _ => false
+    }, "no partial aggregate below the exchange:\n" + planOf(stats))
+    // the stats state is ONE built-in, mergeable sketch family: a
+    // hand-written sketch (Aggregator/UDAF) must not come back
+    val handWritten = nodes.collect {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
+        a.aggregateExpressions.map(_.aggregateFunction.getClass.getSimpleName)
+    }.flatten.filter(n => n.startsWith("ScalaAggregator") || n.startsWith("ScalaUDAF"))
+    assert(handWritten.isEmpty, s"hand-written aggregates in the stats pass: $handWritten")
+  }
+
   test("row checks compile to a single scan with zero shuffles before the verdict agg") {
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val v = Validator.validate(df, SpecParser.parse(SparkEntry.DocSpecJson),

@@ -98,10 +98,10 @@ class SubmitJobSpec extends AnyFunSuite {
     // fetch, row pass, stats), the violation rows read back once, the verdict
     // rows read once by the gate, and the emptiness probe's first file. Spark
     // also counts block reads of a checkpointed frame and the dim scan as
-    // records read: each drift dimension reads the cube twice (its histogram,
-    // and the join side whose inferred null filter defeats exchange reuse)
-    // and the verdict totals once; the candidate rows are read once by the
-    // row fetch's join; the dim once for the FK broadcast.
+    // records read: each drift dimension reads the cube once (its histogram;
+    // the null-safe grid join infers no null filter, so its join side reuses
+    // that exchange) and the verdict totals once; the candidate rows are
+    // read once by the row fetch's join; the dim once for the FK broadcast.
     val violationRows = spark.read.parquet(s"$dir/out/violations").count()
     val verdictRows = spark.read.parquet(s"$dir/out/verdicts").count()
     val largestFile = new java.io.File(s"$inputs/input").listFiles()
@@ -113,10 +113,10 @@ class SubmitJobSpec extends AnyFunSuite {
     val candidateRows = graft.dataset.CrossRow.dupCandidates(input, "doc_id", "part").count()
     val dimRows = spark.read.parquet(s"$inputs/dim").count()
     val table = 5 * InputRows + violationRows + verdictRows + largestFile
-    val frames = (2 * dims.size + 1) * cubeRows + candidateRows + dimRows
+    val frames = (dims.size + 1) * cubeRows + candidateRows + dimRows
     val report = s"read ${listener.recordsRead} records; budget ${table + frames} = " +
       s"5 × $InputRows input rows + $violationRows violation rows + $verdictRows verdict " +
-      s"rows + $largestFile probe rows + ${2 * dims.size + 1} × $cubeRows cube rows + " +
+      s"rows + $largestFile probe rows + ${dims.size + 1} × $cubeRows cube rows + " +
       s"$candidateRows candidate rows + $dimRows dim rows"
     info(report)
     assert(listener.recordsRead <= table + frames, report)
